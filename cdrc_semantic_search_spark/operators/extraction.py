@@ -132,10 +132,6 @@ TRIPLES_SCHEMA = (
     "subj_entity_id string, pred string, obj_entity_id string, score double"
 )
 
-# per-worker link cache: normalized surface → (entity_id|None, score)
-_LINK_CACHE: dict[str, dict] = {}
-
-
 def extract_linked_triples(
     transcripts: DataFrame,
     bc_catalogue,
@@ -154,19 +150,20 @@ def extract_linked_triples(
     identical (tested) but pays four shuffle stages; at 10^12 turns the
     difference is the whole game.
 
-    Worker-side memoization: surfaces repeat heavily (hot entities), so
-    embedding fallbacks hit a per-worker cache keyed by normalized form.
+    Task-side memoization: surfaces repeat heavily (hot entities), so
+    embedding fallbacks hit a per-task cache keyed by normalized form. It
+    is a local of ``run``, bounded by the task's distinct surfaces; a
+    module-level dict would not outlive the task either, because
+    cloudpickle ships a copy of each module global the closure names.
     """
     from cdrc_semantic_search_spark.encoder import normalize_surface
     from cdrc_semantic_search_spark.operators.linking import _topk_blend
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         matcher = _get_matcher(bc_catalogue)
-        token, index = bc_index.value
-        cache = _LINK_CACHE.setdefault(token, {})
-        if len(_LINK_CACHE) > 1:  # new broadcast epoch: drop stale caches
-            for k in [k for k in _LINK_CACHE if k != token]:
-                del _LINK_CACHE[k]
+        _, index = bc_index.value
+        # per-task link cache: normalized surface → (entity_id|None, score)
+        cache: dict[str, tuple] = {}
         alias_map = matcher.alias_to_entity
 
         for pdf in batches:
@@ -259,11 +256,9 @@ def extract_linked_triples_arrow(
 
     def run(batches):
         matcher = _get_matcher(bc_catalogue)
-        token, index = bc_index.value
-        cache = _LINK_CACHE.setdefault(token, {})
-        if len(_LINK_CACHE) > 1:
-            for k in [k for k in _LINK_CACHE if k != token]:
-                del _LINK_CACHE[k]
+        _, index = bc_index.value
+        # per-task link cache: normalized surface → (entity_id|None, score)
+        cache: dict[str, tuple] = {}
         alias_map = matcher.alias_to_entity
 
         for batch in batches:

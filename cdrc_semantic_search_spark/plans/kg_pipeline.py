@@ -590,11 +590,14 @@ class KGPipeline:
         for part in todo:
             sub = with_bucket.filter(F.col("__bucket") == int(part)).drop("__bucket")
             if part in todo_by_table["triples"]:
-                n_turns = sub.count()
-                # Observation rides the write actions — score/link-quality
-                # lineage lands in the ledger with NO extra job (A6 analog)
+                # Observations ride the write action — the kernel's input
+                # turn count and the score/link-quality lineage land in
+                # the ledger with NO extra job (A6 analog)
+                obs_in = Observation(f"turns_part_{part}")
                 obs = Observation(f"triples_part_{part}")
-                tri = self.triples(sub).observe(
+                tri = self.triples(
+                    sub.observe(obs_in, F.count(F.lit(1)).alias("turn_count"))
+                ).observe(
                     obs,
                     F.count(F.lit(1)).alias("triple_count"),
                     F.round(F.avg("score"), 6).alias("avg_link_score"),
@@ -606,8 +609,7 @@ class KGPipeline:
                     "triples",
                     part,
                     source_snapshot=source_snapshot,
-                    metrics={"turn_count": n_turns},
-                    metrics_fn=lambda o=obs: o.get,
+                    metrics_fn=lambda i=obs_in, o=obs: {**i.get, **o.get},
                 )
             if with_graph:
                 self.commit_graph_deltas(

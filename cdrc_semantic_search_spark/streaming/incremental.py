@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdrc_semantic_search_spark.plans.kg_pipeline import KGPipeline
@@ -96,17 +96,21 @@ def stream_triples(
             )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        n_turns = batch_df.count()
-        if n_turns == 0:
-            return
+        # no count() job per batch: the turn count rides the write as an
+        # Observation on the kernel's input. A batch of only 0-row files
+        # (an upstream job that wrote an empty frame) therefore commits
+        # zero-row partitions, graph deltas included, which read as nothing
+        obs_in = Observation(f"turns_batch_{batch_id}")
         snapshot = f"stream:{os.path.basename(input_dir)}"
-        tri = pipeline.triples(batch_df)
+        tri = pipeline.triples(
+            batch_df.observe(obs_in, F.count(F.lit(1)).alias("turn_count"))
+        )
         catalog.overwrite_partition(
             tri,
             table,
             partition=str(batch_id),
             source_snapshot=snapshot,
-            metrics={"turn_count": n_turns},
+            metrics_fn=lambda: obs_in.get,
         )
         if with_graph:
             # shared implementation with the batch path — see

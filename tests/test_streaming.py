@@ -29,6 +29,8 @@ def test_stream_triples_matches_batch(spark, fixture, spark_fixture, transcript_
     )
     ledger = cat.ledger("stream_triples")
     assert len(ledger) >= 2, "expected multiple micro-batches"
+    # each batch's observed input turn count; together they cover the input
+    assert sum(rec.metrics["turn_count"] for rec in ledger) == tdf.count()
     streamed = cat.read_committed(spark, "stream_triples")
     batch = pipe.triples(tdf)
     key = ["conv_id", "turn_idx", "subj_entity_id", "pred", "obj_entity_id"]
@@ -41,6 +43,29 @@ def test_stream_triples_matches_batch(spark, fixture, spark_fixture, transcript_
         spark, pipe, transcript_dir, cat, checkpoint_dir=str(tmp_path / "ckpt")
     )
     assert cat.read_committed(spark, "stream_triples").count() == n_before
+
+
+def test_stream_of_empty_file_commits_empty_partitions(spark, fixture, spark_fixture, tmp_path):
+    """A new file with 0 rows still makes a micro-batch. No count() probe
+    guards it, so the batch commits zero-row partitions (turn_count 0) to
+    the triples and every delta table, and the compacted graph has no
+    edge and no mention."""
+    tdf, _ = spark_fixture
+    src = str(tmp_path / "empty_src")
+    tdf.limit(0).coalesce(1).write.parquet(src)
+    assert any(f.endswith(".parquet") for f in os.listdir(src))
+    pipe = KGPipeline(spark, fixture.entities, Settings())
+    cat = ParquetTableCatalog(str(tmp_path / "empty_cat"))
+    incremental.stream_triples(
+        spark, pipe, src, cat, str(tmp_path / "empty_ckpt"), with_graph=True
+    )
+    (rec,) = cat.ledger("stream_triples")
+    assert (rec.row_count, rec.metrics["turn_count"]) == (0, 0)
+    for t in ("edge_deltas", "node_deltas", "surface_deltas"):
+        assert cat.committed_partitions(t) == {rec.partition}
+    assert cat.read_committed(spark, "stream_triples").count() == 0
+    assert KGPipeline.compacted_edges(spark, cat).count() == 0
+    assert pipe.compacted_nodes(cat).filter("n_mentions > 0").count() == 0
 
 
 def test_streamed_graph_deltas_equal_batch_rebuild(
